@@ -226,7 +226,13 @@ class SnapshotTable:
             raise ValueError(
                 f"merge_upsert batch missing key columns: {sorted(missing_keys)}"
             )
-        u = updates.withColumn(_BUCKET, _bucket_expr(keys, nb))
+        # materialize the bucketed batch ONCE: the touched-bucket collect
+        # and the write must see the same rows, or a non-deterministic
+        # batch could write into a bucket that was never read — and the
+        # commit would replace that bucket with the update rows alone
+        u = updates.withColumn(_BUCKET, _bucket_expr(keys, nb)).localCheckpoint(
+            eager=True
+        )
         # bounded collect: at most n_buckets values, never data rows
         touched = sorted(
             r[_BUCKET] for r in u.select(_BUCKET).distinct().collect()
@@ -358,21 +364,21 @@ class SnapshotTable:
             for b in set(owners_from) | set(owners_to)
             if owners_from.get(b) != owners_to.get(b)
         )
-        empty = self.spark.createDataFrame(
-            [], self.read(m_to["version"]).schema
-        )
-        before_paths = self._bucket_paths(m_from, changed)
-        after_paths = self._bucket_paths(m_to, changed)
-        before = (
-            self.spark.read.option("mergeSchema", "true").parquet(*before_paths)
-            if before_paths
-            else empty
-        )
-        after = (
-            self.spark.read.option("mergeSchema", "true").parquet(*after_paths)
-            if after_paths
-            else empty
-        )
+
+        def side(paths):
+            if paths:
+                return self.spark.read.option("mergeSchema", "true").parquet(
+                    *paths
+                )
+            # a side with no changed buckets diffs as an empty frame of
+            # the target version's schema (footers of the whole snapshot,
+            # so only read when needed)
+            return self.spark.createDataFrame(
+                [], self.read(m_to["version"]).schema
+            )
+
+        before = side(self._bucket_paths(m_from, changed))
+        after = side(self._bucket_paths(m_to, changed))
         # columns added by a later merge don't exist in the before-side
         # files: align them as NULL so the diff classifies a changed value
         # in an added column as 'changed', not a schema error

@@ -616,7 +616,7 @@ class IvfIndex:
         # cell files): refresh it like add() does, or a server would probe
         # with stale centroids against overwritten files
         if (self.root / "manifest.json").exists():
-            self.export_manifest()
+            self._write_manifest(cent_rows)
 
     @_locked
     def add(
@@ -631,17 +631,16 @@ class IvfIndex:
         partition directories. This is the train/add split FAISS IVF
         uses (reference ``faiss_manager.py`` appends daily without
         retraining): centroids drift only across periodic ``build()``
-        rebuilds, which is the standard maintenance contract. If a
+        rebuilds, which is the standard maintenance contract. The frozen
+        centroids come from ``manifest.json`` when one has been exported
+        (no Spark job), else from the ``centroids/`` parquet. If a
         serving manifest has been exported it is refreshed so the file
         listing includes the appended cell files."""
         from .operators.vector import assign_cells_literal
 
-        cents = self.spark.read.parquet(str(self.root / "centroids")).collect()
-        if not cents:
+        cent_rows = self._frozen_centroids()
+        if not cent_rows:
             raise ValueError("IvfIndex.add() before build(): no centroids")
-        cent_rows = [
-            (int(r.cell_id), [float(x) for x in r.centroid]) for r in cents
-        ]
         batch = df.select(id_col, vec_col)
         if self.metric() == "cosine":
             batch = self._normalized(
@@ -693,8 +692,7 @@ class IvfIndex:
             .partitionBy("cell_id")
             .parquet(str(self.root / "cells"))
         )
-        if (self.root / "manifest.json").exists():
-            self.export_manifest()
+        self._refresh_manifest()
 
     # --------------------------------------------------- maintenance
 
@@ -755,8 +753,7 @@ class IvfIndex:
             _sh.rmtree(bak, ignore_errors=True)
         _sh.rmtree(bak_root, ignore_errors=True)
         _sh.rmtree(tmp, ignore_errors=True)
-        if (self.root / "manifest.json").exists():
-            self.export_manifest()
+        self._refresh_manifest()
 
     @_locked
     def delete(self, ids, id_col: str = "vec_id") -> int:
@@ -831,10 +828,42 @@ class IvfIndex:
         ``faiss_manager.py``) can pick probe cells from the centroids and
         mmap exactly the listed files, without a Spark session and
         without re-deriving the partition layout from a directory walk.
-        One bounded JSON: n_cells centroids + file names, never vectors."""
+        One bounded JSON: n_cells centroids + file names, never vectors.
+
+        This export reads the centroids from the ``centroids/`` parquet,
+        the source of truth. The refresh after a mutation
+        (``add``/``delete``/``compact``) carries them over from the
+        previous ``manifest.json`` instead — they are frozen between
+        builds — and ``build`` writes the ones it just trained."""
+        return self._write_manifest(self._parquet_centroids())
+
+    def _parquet_centroids(self) -> list[tuple[int, list[float]]]:
+        return [
+            (int(r.cell_id), [float(x) for x in r.centroid])
+            for r in self.spark.read.parquet(
+                str(self.root / "centroids")
+            ).collect()  # n_cells rows — bounded by design
+        ]
+
+    def _frozen_centroids(self) -> list[tuple[int, list[float]]]:
+        """(cell_id, centroid) pairs: from the exported manifest when
+        there is one (zero Spark jobs), else from the parquet."""
+        manifest = self.read_manifest()
+        if manifest is None:
+            return self._parquet_centroids()
+        return [
+            (int(cid), vec) for cid, vec in manifest["centroids"].items()
+        ]
+
+    def _refresh_manifest(self) -> None:
+        """Re-list the cell files of an exported manifest after a
+        mutation; the frozen centroids carry over."""
+        if (self.root / "manifest.json").exists():
+            self._write_manifest(self._frozen_centroids())
+
+    def _write_manifest(self, cents: list[tuple[int, list[float]]]) -> dict:
         import json
 
-        cents = self.spark.read.parquet(str(self.root / "centroids")).collect()
         cells_root = self.root / "cells"
         cells: dict[str, list[str]] = {}
         for part in sorted(cells_root.glob("cell_id=*")):
@@ -845,12 +874,9 @@ class IvfIndex:
         manifest = {
             "format": self.MANIFEST_FORMAT,
             "metric": self.metric(),
-            "dim": len(cents[0].centroid) if cents else 0,
+            "dim": len(cents[0][1]) if cents else 0,
             "n_cells": len(cents),
-            "centroids": {
-                str(int(r.cell_id)): [float(x) for x in r.centroid]
-                for r in cents
-            },
+            "centroids": {str(cid): vec for cid, vec in cents},
             "cells": cells,
         }
         (self.root / "manifest.json").write_text(
@@ -1055,18 +1081,7 @@ class IvfIndex:
         # Spark jobs (a query should only ever launch the ONE pruned-scan
         # job); the parquet centroids remain the source of truth when no
         # manifest has been exported
-        manifest = self.read_manifest()
-        if manifest is not None:
-            cent_pairs = [
-                (int(cid), vec) for cid, vec in manifest["centroids"].items()
-            ]
-        else:
-            cent_pairs = [
-                (int(r.cell_id), r.centroid)
-                for r in self.spark.read.parquet(
-                    str(self.root / "centroids")
-                ).collect()
-            ]
+        cent_pairs = self._frozen_centroids()
         # rank cells by the SAME _cell_distance geometry the rows were
         # assigned with (l2 → squared L2; cosine → 1-cos against the
         # non-unit mean centroid), so partial-nprobe probes the cells

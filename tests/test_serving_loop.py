@@ -153,6 +153,108 @@ def test_cdc_to_index_serving_loop(spark, tmp_path, corpus):
     assert only_low and all(r.vec_id < 100 for r in only_low)
 
 
+def _jobs_in(spark, name: str, fn):
+    """Run ``fn`` under a fresh job group; returns (result, job count)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"{name}-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_both_maintainers_sync_one_write(spark, tmp_path):
+    """One write (inserts, edits, a delete) synced into both indexes:
+    the returned counts, an index that answers like a fresh build of the
+    current table, and a ceiling on the Spark jobs each sync() launches
+    — the CDC delta is read once per sync and the frozen centroids come
+    from the manifest, not the parquet. The IVF side is checked by
+    content (a fresh build's full-probe search is exact kNN over the
+    same rows) to spare a second k-means training."""
+    from mcp_hubspot_spark.serving import IndexMaintainer, TextIndexMaintainer
+    from mcp_hubspot_spark.text_index import TextIndex
+
+    table = SnapshotTable(spark, str(tmp_path / "docs"))
+    table.create(
+        spark.createDataFrame(
+            [(i, f"tier doc {i} about subject {i % 6} item{i}") for i in range(40)],
+            "doc_id long, text string",
+        ),
+        keys=["doc_id"],
+        n_buckets=4,
+    )
+
+    def embed(df):
+        # a Catalyst-only stand-in for the embedding UDF: k-means training
+        # rescans its input once per iteration
+        return df.select(
+            F.col("doc_id").alias("vec_id"),
+            F.array(
+                *[F.xxhash64("text", F.lit(j)) % 997 / 997.0 for j in range(8)]
+            ).alias("embedding"),
+        )
+
+    ivf_m = IndexMaintainer(
+        spark, table, IvfIndex(spark, str(tmp_path / "ivf")), embed=embed
+    )
+    ivf_m.initialize(n_cells=2)
+
+    def text_maintainer(name):
+        m = TextIndexMaintainer(
+            spark, table, TextIndex(spark, str(tmp_path / name))
+        )
+        m.initialize(num_buckets=8)
+        return m
+
+    tix_m = text_maintainer("tix")
+    table.merge_upsert(
+        spark.createDataFrame(
+            [(100, "new zebra notes"), (101, "new okapi memo"),
+             (3, "doc three now about zebra"), (4, "doc four rewritten")],
+            "doc_id long, text string",
+        )
+    )
+    table.delete_where(F.col("doc_id") == 9)
+
+    ivf_rep, ivf_jobs = _jobs_in(spark, "ivf_sync", ivf_m.sync)
+    tix_rep, tix_jobs = _jobs_in(spark, "text_sync", tix_m.sync)
+    assert ivf_rep == {"from": 0, "to": 2, "deleted": 3, "added": 4}
+    assert tix_rep == {"from": 0, "to": 2, "tombstoned": 5, "added": 4}
+    # 29 and 18 jobs when the delta was re-derived per use
+    assert ivf_jobs <= 20, ivf_jobs
+    assert tix_jobs <= 12, tix_jobs
+
+    # same rows as a fresh build, so a full-probe search answers alike
+    cells = str(ivf_m.index.root / "cells")
+    rows = (
+        spark.read.option("basePath", cells).parquet(cells)
+        .select(F.lit("index").alias("side"), "vec_id", "embedding")
+        .unionByName(embed(table.read()).withColumn("side", F.lit("table")))
+        .collect()
+    )
+    got, want = (
+        sorted((r.vec_id, tuple(r.embedding)) for r in rows if r.side == side)
+        for side in ("index", "table")
+    )
+    assert got == want
+
+    ref = text_maintainer("tix_ref")
+    terms = {"a": ["zebra"], "b": ["doc", "rewritten"], "c": ["subject", "item9"]}
+    got, want = (
+        sorted(
+            (r.query_id, r.rank, r.doc_id, round(r.score, 9))
+            for r in m.index.search_batch(terms, k=10).collect()
+        )
+        for m in (tix_m, ref)
+    )
+    assert got == want
+
+
 @pytest.mark.slow
 def test_index_maintainer_sync_cycles(spark, tmp_path):
     """IndexMaintainer: the packaged form of the loop above — two sync

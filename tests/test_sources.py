@@ -216,6 +216,41 @@ def test_snapshot_merge_rewrites_only_touched_buckets(spark, tmp_path):
     assert len(_snap_rows(tbl)) == 200
 
 
+def test_snapshot_merge_nondeterministic_batch_keeps_buckets(spark, tmp_path):
+    """A non-deterministic update batch is evaluated ONCE per merge: the
+    buckets it reads and the buckets it writes come from the same rows.
+    Evaluated twice, a key can land in a bucket that was never read, and
+    the commit replaces that whole bucket with the update row alone."""
+    import random
+
+    from pyspark.sql.functions import udf
+
+    from mcp_hubspot_spark.sources.snapshot_table import SnapshotTable
+
+    tbl = SnapshotTable(spark, str(tmp_path / "t"))
+    tbl.create(
+        spark.createDataFrame(
+            [(i, f"n{i}", float(i)) for i in range(800)],
+            "id long, name string, score double",
+        ),
+        keys=["id"],
+        n_buckets=8,
+    )
+    for k in range(6):
+        base = 10_000 + 1000 * k  # each merge inserts one new key
+        key = udf(lambda: base + random.randrange(1000), "long")
+        tbl.merge_upsert(
+            spark.range(1).select(
+                key.asNondeterministic()().alias("id"),
+                F.lit("new").alias("name"),
+                F.lit(1.0).alias("score"),
+            )
+        )
+    got = _snap_rows(tbl)
+    assert len(got) == 806
+    assert all(i in got for i in range(800))
+
+
 def test_snapshot_commit_conflict_detected(spark, tmp_path):
     """Optimistic concurrency: a writer whose base version was superseded
     must fail with SnapshotConflictError, not silently drop the winner."""
