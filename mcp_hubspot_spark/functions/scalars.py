@@ -8,9 +8,8 @@ that stays inside whole-stage codegen.
 from __future__ import annotations
 
 import math
-import weakref
 
-from pyspark.sql import Column, SparkSession
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -69,50 +68,6 @@ def const_long_array(values) -> Column:
     return F.expr("array(" + parts + ")")
 
 
-# (builder name, rendered input expression text, *params) -> built Column.
-# Scoped to ONE SparkSession (cleared on session change — a cached Column
-# holds py4j refs that die with the JVM-side session) and FIFO-capped so a
-# long-lived driver with many distinct inputs cannot grow it without bound
-# (r13 advice / verdict what's-wrong #5).
-_EXPR_MEMO: dict[tuple, Column] = {}
-_EXPR_MEMO_CAP = 512
-_MEMO_SESSION: "weakref.ref[SparkSession] | None" = None
-
-
-def memo_expr(key: tuple, build) -> Column:
-    """Memoized Column construction for expensive expression builders
-    (minhash/simhash/sign_pack/ngram chains cost 60-220 ms of py4j
-    round-trips per call — r13 cProfile — and recur with identical
-    inputs across queries and bench reps). Columns are immutable
-    unresolved expression wrappers, so a shared object resolves per-plan
-    exactly like a shared ``F.col`` — metadata only, never data (the
-    schema/fan_out memo precedent). ``key`` must capture EVERY input
-    that changes the built expression: the rendered input expression
-    text (equal text == equal unresolved tree) plus all parameters.
-
-    INVARIANT: only UNRESOLVED expressions (``F.col`` trees, literals)
-    may be memoized. A plan-bound Column (``df["x"]``) renders the same
-    text as ``F.col("x")`` but resolves against one specific DataFrame —
-    memoizing it would hand that binding to unrelated plans. Callers
-    that accept arbitrary Columns must bypass the memo for Column inputs
-    (see minhash_signature/simhash/sign_pack) or guarantee the input is
-    an internally-built unresolved tree (positional_ngrams)."""
-    global _MEMO_SESSION
-    sess = SparkSession.getActiveSession()
-    cur = _MEMO_SESSION() if _MEMO_SESSION is not None else None
-    if sess is not cur:
-        # different or restarted session: cached Columns wrap py4j objects
-        # from the previous JVM-side session — drop them all
-        _EXPR_MEMO.clear()
-        _MEMO_SESSION = weakref.ref(sess) if sess is not None else None
-    got = _EXPR_MEMO.get(key)
-    if got is None:
-        got = build()
-        if len(_EXPR_MEMO) >= _EXPR_MEMO_CAP:
-            _EXPR_MEMO.pop(next(iter(_EXPR_MEMO)))
-        _EXPR_MEMO[key] = got
-    return got
-
 # F1 — recursive datetime → ISO-8601 string. Schema is explicit here, so
 # "recursive tree walk" degenerates to per-timestamp-column formatting
 # (reference core/formatters.py:8-27).
@@ -121,12 +76,6 @@ ISO_FMT = "yyyy-MM-dd'T'HH:mm:ss"
 
 def iso_format(c: Column | str, fmt: str = ISO_FMT) -> Column:
     return F.date_format(c, fmt)
-
-
-def tz_offset_string(c: Column | str) -> Column:
-    """F2 — render a timestamp's zone offset as "UTC+08:00"
-    (reference core/formatters.py:23-26)."""
-    return F.concat(F.lit("UTC"), F.date_format(c, "xxx"))
 
 
 def truncate_text(c: Column | str, n: int = 200) -> Column:
@@ -221,28 +170,6 @@ def engagement_content(etype: Column, md: Column) -> Column:
         F.when(etype == "MEETING", meeting_struct).alias("meeting"),
         F.when(etype == "CALL", call_struct).alias("call"),
     )
-
-
-def normalize_participants(parts: Column | str) -> Column:
-    """F9 — participant normalization over to/cc/bcc arrays (reference
-    company_client.py:206-232) via transform()."""
-    p = F.col(parts) if isinstance(parts, str) else parts
-    return F.transform(
-        p,
-        lambda x: F.struct(
-            F.coalesce(x.getField("raw"), F.lit("")).alias("raw"),
-            F.coalesce(x.getField("email"), F.lit("")).alias("email"),
-            F.coalesce(x.getField("firstName"), F.lit("")).alias("firstName"),
-            F.coalesce(x.getField("lastName"), F.lit("")).alias("lastName"),
-        ),
-    )
-
-
-def canonical_json(*cols: Column | str) -> Column:
-    """F10 — record → JSON text with EXPLICIT field order (struct order is
-    the canonical order; reference utils.py:22 relies on dict insertion
-    order — SURVEY flags this as the hash-parity trap)."""
-    return F.to_json(F.struct(*cols))
 
 
 def similarity_from_distance(distance: Column | str) -> Column:

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.scalars import const_double_array, const_long_array, memo_expr
+from ..functions.scalars import const_long_array
 
 from .text import positional_ngrams, tokens
 from .vector import dot, l2_norm
@@ -93,26 +93,7 @@ def minhash_signature(
     num_perm) hash invocations, and the whole signature is ONE expression
     over the hashed-shingle array so Catalyst never duplicates the md5.
     Jaccard(A,B) ≈ fraction of matching signature positions.
-
-    Construction (a ~120 ms py4j chain) is memoized on the column NAME +
-    every parameter — see ``memo_expr``. Only string inputs are
-    memoized: a caller-supplied Column may be plan-bound (``df["x"]``),
-    which renders identically to ``F.col("x")`` but resolves against one
-    specific DataFrame, so sharing it across plans would mis-resolve.
     """
-    if not isinstance(text_col, str):
-        return _build_minhash_signature(text_col, num_perm, shingle_n, seed)
-    return memo_expr(
-        ("minhash_signature", text_col, num_perm, shingle_n, seed),
-        lambda: _build_minhash_signature(
-            F.col(text_col), num_perm, shingle_n, seed
-        ),
-    )
-
-
-def _build_minhash_signature(
-    text_col: Column, num_perm: int, shingle_n: int, seed: int
-) -> Column:
     a, b = minhash_perm_constants(num_perm, seed)
     sh = word_shingles(text_col, n=shingle_n)
     hashes = F.transform(
@@ -179,15 +160,12 @@ def _sig_match_fraction(col_a: str, col_b: str, num_perm: int) -> Column:
     pre-distinct shape losing to the r12 wide shape by ~20% purely on
     the repeated interpreted folds (17.9 vs 14.6 s at 200k docs); with
     the unrolled form the narrow shuffle keeps its byte win without the
-    HOF tax. Memoized on (cols, num_perm) — fixed SQL text."""
+    HOF tax."""
     terms = " + ".join(
         f"(case when `{col_a}`[{i}] = `{col_b}`[{i}] then 1 else 0 end)"
         for i in range(num_perm)
     )
-    return memo_expr(
-        ("sig_match_fraction", col_a, col_b, num_perm),
-        lambda: F.expr(f"({terms}) / {float(num_perm)!r}D"),
-    )
+    return F.expr(f"({terms}) / {float(num_perm)!r}D")
 
 
 def minhash_lsh_pairs(
@@ -258,21 +236,7 @@ def simhash(text_col: Column | str, shingle_n: int = 2) -> Column:
     Per bit: vote = sum over shingles of (+1 if set else -1); fingerprint
     bit = 1 iff vote > 0. Deterministic and engine-portable (md5), no UDF —
     one scan, no shuffle.
-
-    Construction (a ~140 ms py4j chain) is memoized on the column NAME +
-    shingle_n — see ``memo_expr``. Only string inputs are memoized
-    (plan-bound Columns render like ``F.col`` but resolve against one
-    DataFrame — see minhash_signature).
     """
-    if not isinstance(text_col, str):
-        return _build_simhash(text_col, shingle_n)
-    return memo_expr(
-        ("simhash", text_col, shingle_n),
-        lambda: _build_simhash(F.col(text_col), shingle_n),
-    )
-
-
-def _build_simhash(text_col: Column, shingle_n: int) -> Column:
     sh = word_shingles(text_col, n=shingle_n)
     words = F.transform(
         sh, lambda s: F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long")
@@ -457,38 +421,6 @@ def random_hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[flo
 
     rng = np.random.default_rng(seed)
     return rng.standard_normal((n_planes, dim)).astype("float64").tolist()
-
-
-def lsh_bucket(vec_col: Column, planes: list[list[float]]) -> Column:
-    """Random-hyperplane LSH bucket id: one sign bit per plane."""
-    key = F.lit(0).cast("long")
-    for i, p in enumerate(planes):
-        s = dot(vec_col, const_double_array(p))
-        key = key + F.when(s > 0, F.lit(1 << i).cast("long")).otherwise(F.lit(0))
-    return key
-
-
-def _lsh_bucket_sql(vec_name: str, planes: list[list[float]]) -> str:
-    """SQL-string form of ``lsh_bucket`` — identical math (same zip_with/
-    aggregate fold, same ``> 0`` sign test), but ONE parser round-trip
-    instead of thousands of py4j ``F.lit`` calls. With planes × tables ×
-    dim in the thousands, Column-object construction dominates wall time
-    (measured 2.6 s build vs 1.1 s execute); a literal SQL string moves
-    that cost to the JVM parser (~ms). ``repr(float)`` is the shortest
-    round-trip decimal, which Java parses back to the same IEEE double.
-    """
-    terms = []
-    for i, p in enumerate(planes):
-        arr = ", ".join(f"{x!r}D" for x in p)
-        d = (
-            f"aggregate(zip_with(`{vec_name}`, array({arr}), (x, y) -> x * y), "
-            f"0.0D, (acc, x) -> acc + x)"
-        )
-        terms.append(
-            f"(CASE WHEN {d} > 0 THEN CAST({1 << i} AS BIGINT) "
-            f"ELSE CAST(0 AS BIGINT) END)"
-        )
-    return " + ".join(terms)
 
 
 def embedding_neardup_pairs(
@@ -1248,57 +1180,35 @@ def _merge_diagonal_runs(
     island groupBy re-aggregates the same partition with the island id
     appended (AQE-local, the window already clustered the rows)."""
     # Every Column here is built from fixed SQL text (parameterized only
-    # by the partition keys / k) and memoized: the former Window/when
-    # builder chains cost ~130 ms of py4j round-trips per query build
-    # (r13 verdict next-#5 driver-chatter item); a memoized F.expr parse
-    # is one round-trip once per session. Value-identical: CASE WHEN
-    # lag(..)=pos_a-1 THEN 0 ELSE 1 END matches the when/otherwise
-    # (NULL lag falls to ELSE both ways), and the casts are unchanged.
+    # by the partition keys / k): the former Window/when builder chains
+    # cost ~130 ms of py4j round-trips per query build (r13 verdict
+    # next-#5 driver-chatter item); an F.expr parse is one round-trip.
+    # Value-identical: CASE WHEN lag(..)=pos_a-1 THEN 0 ELSE 1 END matches
+    # the when/otherwise (NULL lag falls to ELSE both ways), and the casts
+    # are unchanged.
     part = ", ".join([f"`{c}`" for c in keys] + ["diag"])
-    kt = tuple(keys)
-    new_island = memo_expr(
-        ("mdr_new", kt),
-        lambda: F.expr(
-            f"case when lag(pos_a) over (partition by {part} "
-            "order by pos_a) = pos_a - 1 then 0 else 1 end"
-        ),
+    new_island = F.expr(
+        f"case when lag(pos_a) over (partition by {part} "
+        "order by pos_a) = pos_a - 1 then 0 else 1 end"
     )
-    island = memo_expr(
-        ("mdr_island", kt),
-        lambda: F.expr(
-            f"sum(_new) over (partition by {part} order by pos_a "
-            "rows between unbounded preceding and current row)"
-        ),
+    island = F.expr(
+        f"sum(_new) over (partition by {part} order by pos_a "
+        "rows between unbounded preceding and current row)"
     )
     run = matched.withColumn("_new", new_island).withColumn("island", island)
     spans = (
         run.groupBy(*keys, "diag", "island")
         .agg(
-            memo_expr(
-                ("mdr_astart",),
-                lambda: F.expr("cast(min(pos_a) as bigint)"),
-            ).alias("a_start"),
-            memo_expr(
-                ("mdr_aend", k),
-                lambda: F.expr(f"cast(max(pos_a) + {k - 1} as bigint)"),
-            ).alias("a_end"),
+            F.expr("cast(min(pos_a) as bigint)").alias("a_start"),
+            F.expr(f"cast(max(pos_a) + {k - 1} as bigint)").alias("a_end"),
         )
         .select(
             *keys,
             "a_start",
             "a_end",
-            memo_expr(
-                ("mdr_bstart",),
-                lambda: F.expr("cast(a_start - diag as bigint)"),
-            ).alias("b_start"),
-            memo_expr(
-                ("mdr_bend",),
-                lambda: F.expr("cast(a_end - diag as bigint)"),
-            ).alias("b_end"),
-            memo_expr(
-                ("mdr_ntok",),
-                lambda: F.expr("cast(a_end - a_start + 1 as bigint)"),
-            ).alias("n_tokens"),
+            F.expr("cast(a_start - diag as bigint)").alias("b_start"),
+            F.expr("cast(a_end - diag as bigint)").alias("b_end"),
+            F.expr("cast(a_end - a_start + 1 as bigint)").alias("n_tokens"),
         )
     )
     if min_tokens is not None and min_tokens > k:
@@ -1558,38 +1468,29 @@ def _cut_spans(
     stays expression-side either way."""
     from .text import tokens
 
-    # All fixed-shape Columns below are SQL-text parses memoized per
-    # session (parameterized only by id_col): the former Window/when/HOF
-    # builder chains cost ~240 ms of py4j round-trips per query build
-    # (r13 verdict next-#5 driver-chatter item). Value-identical: the
-    # CASE mirrors when/otherwise, NOT exists mirrors ~F.exists, and the
+    # All fixed-shape Columns below are SQL-text parses (parameterized
+    # only by id_col): the former Window/when/HOF builder chains cost
+    # ~240 ms of py4j round-trips per query build (r13 verdict next-#5
+    # driver-chatter item). Value-identical: the CASE mirrors
+    # when/otherwise, NOT exists mirrors ~F.exists, and the
     # coalesce-to-typed-empty moved inside the filter (only _kept reads
     # _iv, so coalescing at the use site is the same expression).
     qid = f"`{id_col}`"
-    prev_max = memo_expr(
-        ("cut_pm", id_col),
-        lambda: F.expr(
-            f"max(e) over (partition by {qid} order by s, e "
-            "rows between unbounded preceding and 1 preceding)"
-        ),
+    prev_max = F.expr(
+        f"max(e) over (partition by {qid} order by s, e "
+        "rows between unbounded preceding and 1 preceding)"
     )
-    grp = memo_expr(
-        ("cut_g", id_col),
-        lambda: F.expr(
-            "sum(case when _pm is null or s > _pm then 1 else 0 end) "
-            f"over (partition by {qid} order by s, e "
-            "rows between unbounded preceding and current row)"
-        ),
+    grp = F.expr(
+        "sum(case when _pm is null or s > _pm then 1 else 0 end) "
+        f"over (partition by {qid} order by s, e "
+        "rows between unbounded preceding and current row)"
     )
     flagged = rem.withColumn("_pm", prev_max).withColumn("_g", grp)
     merged = flagged.groupBy(id_col, "_g").agg(
         F.min("s").alias("s"), F.max("e").alias("e")
     )
     iv = merged.groupBy(id_col).agg(
-        memo_expr(
-            ("cut_iv",),
-            lambda: F.expr("sort_array(collect_list(struct(s, e)))"),
-        ).alias("_iv")
+        F.expr("sort_array(collect_list(struct(s, e)))").alias("_iv")
     )
     if byte_faithful:
         return _cut_spans_bytes(df, iv, id_col, text_col)
@@ -1601,32 +1502,24 @@ def _cut_spans(
             tokens(F.col(text_col)), F.array().cast("array<string>")
         ).alias("_toks"),
     )
-    kept = memo_expr(
-        ("cut_kept",),
-        lambda: F.expr(
-            "filter(transform(_toks, (t, i) -> struct(t, i)), "
-            "s -> NOT exists(coalesce(_iv, "
-            "cast(array() as array<struct<s:bigint,e:bigint>>)), "
-            "span -> s.i >= span.s AND s.i <= span.e))"
-        ),
+    kept = F.expr(
+        "filter(transform(_toks, (t, i) -> struct(t, i)), "
+        "s -> NOT exists(coalesce(_iv, "
+        "cast(array() as array<struct<s:bigint,e:bigint>>)), "
+        "span -> s.i >= span.s AND s.i <= span.e))"
     )
     return (
         toks_df.join(iv, id_col, "left")
         .withColumn("_kept", kept)
         .select(
             F.col(id_col),
-            memo_expr(
-                ("cut_clean",),
-                lambda: F.expr("concat_ws(' ', transform(_kept, s -> s.t))"),
-            ).alias("clean_text"),
-            memo_expr(
-                ("cut_ntok",),
-                lambda: F.expr("cast(size(_toks) as bigint)"),
-            ).alias("n_tokens"),
-            memo_expr(
-                ("cut_nrem",),
-                lambda: F.expr("cast(size(_toks) - size(_kept) as bigint)"),
-            ).alias("n_tokens_removed"),
+            F.expr("concat_ws(' ', transform(_kept, s -> s.t))").alias(
+                "clean_text"
+            ),
+            F.expr("cast(size(_toks) as bigint)").alias("n_tokens"),
+            F.expr("cast(size(_toks) - size(_kept) as bigint)").alias(
+                "n_tokens_removed"
+            ),
         )
     )
 

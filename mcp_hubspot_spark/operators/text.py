@@ -12,8 +12,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.scalars import memo_expr
-
 _WS = r"\s+"
 
 # tiny per-language stopword marker lists for the heuristic language ID.
@@ -35,14 +33,6 @@ def tokens(c: Column | str) -> Column:
 def token_count(c: Column | str) -> Column:
     """Whitespace token count (training-data token budget estimator)."""
     return F.size(tokens(c))
-
-
-def bpe_ish_token_count(c: Column | str) -> Column:
-    """BPE-flavored token estimate: count word pieces + digits + punctuation
-    runs, the standard ~len/4 heuristic refined by a regex tokenizer."""
-    col = F.col(c) if isinstance(c, str) else c
-    pieces = F.split(col, r"(?=[A-Z])|[^\p{L}\p{N}]+")
-    return F.size(F.filter(pieces, lambda x: x != ""))
 
 
 def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -160,26 +150,9 @@ def positional_ngrams(toks: Column, n: int) -> Column:
     position size-n+1 (where a shifted view runs out) are nulled by the
     last zip and cut by the final slice, so the output is exactly the
     full-gram list at positions 1..size-n+1, in order, with multiplicity.
-
-    Construction is MEMOIZED via ``memo_expr`` (one memo, one policy:
-    session-scoped, FIFO-capped) on (rendered input expression, n):
-    building the n-1 zip_with chain costs 64-137 ms of py4j round-trips
-    per call (r13 cProfile) and the same (tokens(col), n) pair recurs
-    across many queries and bench reps. Equal rendered text == equal
-    unresolved tree, so a memo hit is the identical expression — VALID
-    because every caller passes an internally-built unresolved tree
-    (``tokens(...)`` chains over ``F.col``), never a plan-bound Column;
-    see the memo_expr invariant.
     """
     if n == 1:
         return toks
-    return memo_expr(
-        ("positional_ngrams", str(toks), n),
-        lambda: _build_positional_ngrams(toks, n),
-    )
-
-
-def _build_positional_ngrams(toks: Column, n: int) -> Column:
     sz = F.size(toks)
     out = toks
     for k in range(1, n):
@@ -207,22 +180,6 @@ def ngram_list(toks: Column, n: int) -> Column:
     return F.when(F.size(toks) >= n, positional_ngrams(toks, n)).otherwise(
         F.array().cast("array<string>")
     )
-
-
-def dup_ngram_frac(toks: Column, n: int) -> Column:
-    """Fraction of n-gram occurrences that are repeats of an earlier
-    n-gram in the same document: (total - distinct) / total, 0.0 for
-    docs with no n-grams. Gopher-style repetition quality signal.
-
-    PERF: pass ``toks`` as a materialized COLUMN REFERENCE, not a nested
-    ``split(...)`` expression — HOF lambdas have no common-subexpression
-    elimination, so a nested tokenizer re-runs per n-gram position
-    (measured 10x at 200k docs). ``repetition_features`` stages the
-    token and gram arrays through explicit projections for this reason."""
-    grams = ngram_list(toks, n)
-    total = F.size(grams)
-    dups = (total - F.size(F.array_distinct(grams))).cast("double")
-    return F.when(total > 0, F.round(dups / total, 4)).otherwise(F.lit(0.0))
 
 
 def _dup_frac_of(grams: Column) -> Column:

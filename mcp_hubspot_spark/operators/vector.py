@@ -28,7 +28,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.scalars import const_double_array, const_long_array, memo_expr
+from ..functions.scalars import const_double_array, const_long_array
 
 
 def _vec_lit(vec: Sequence[float]) -> Column:
@@ -984,21 +984,8 @@ def sign_pack(vec, dim: int, bits_per_word: int = 32) -> Column:
     approximates angular distance (Charikar 2002 — the same hyperplane
     family embedding_neardup_lsh banding uses, here axis-aligned for
     oracle replayability; rotate first via rotate_expr for the random-
-    hyperplane form).
-
-    Construction (a ~220 ms py4j HOF chain at dim=64) is memoized on
-    the column NAME + every parameter — see ``memo_expr``. Only string
-    inputs are memoized (plan-bound Columns render like ``F.col`` but
-    resolve against one DataFrame — see minhash_signature)."""
-    if isinstance(vec, Column):
-        return _build_sign_pack(vec, dim, bits_per_word)
-    return memo_expr(
-        ("sign_pack", vec, dim, bits_per_word),
-        lambda: _build_sign_pack(F.col(vec), dim, bits_per_word),
-    )
-
-
-def _build_sign_pack(v: Column, dim: int, bits_per_word: int) -> Column:
+    hyperplane form)."""
+    v = vec if isinstance(vec, Column) else F.col(vec)
     n_words = (dim + bits_per_word - 1) // bits_per_word
     words = []
     for w in range(n_words):

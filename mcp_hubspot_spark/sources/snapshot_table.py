@@ -17,7 +17,7 @@ directly on parquet:
   directory that currently owns it. Readers resolve the manifest once and
   read exactly those directories; writers never mutate a published file.
 - **Atomic commit**: the manifest swap is a single ``os.replace`` (atomic
-  on POSIX) under an ``O_CREAT|O_EXCL`` lock file, with an
+  on POSIX) under a single-writer ``flock`` (``locking``), with an
   expected-version check — a concurrent committed writer raises
   ``SnapshotConflictError`` instead of silently losing rows (optimistic
   concurrency, same contract as Delta's commit protocol). On an object
@@ -37,12 +37,14 @@ from __future__ import annotations
 import json
 import os
 import shutil
-import time
 import uuid
 from collections.abc import Sequence
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..locking import flock_held
 
 _MANIFEST = "_latest.json"
 _LOCK = "_commit.lock"
@@ -84,19 +86,9 @@ class SnapshotTable:
         """Atomically publish ``manifest`` iff the table is still at
         ``expected_version`` (None = initial commit, table must not exist).
         """
-        os.makedirs(self.root, exist_ok=True)
-        lock = os.path.join(self.root, _LOCK)
-        # O_EXCL lock: only one committer holds it; held only for the
-        # pointer check + rename, never during the (long) data write
-        for _ in range(200):
-            try:
-                fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-                break
-            except FileExistsError:
-                time.sleep(0.05)
-        else:
-            raise TimeoutError(f"could not acquire commit lock {lock}")
-        try:
+        # single-writer flock (see ``locking``): held only for the pointer
+        # check + rename, never during the (long) data write
+        with flock_held(Path(self.root) / _LOCK, timeout_s=10.0):
             current = None
             if os.path.exists(self._manifest_path()):
                 current = self._read_manifest()["version"]
@@ -108,9 +100,6 @@ class SnapshotTable:
             with open(tmp, "w") as fh:
                 json.dump(manifest, fh)
             os.replace(tmp, self._manifest_path())  # the atomic commit point
-        finally:
-            os.close(fd)
-            os.remove(lock)
 
     # ----------------------------------------------------------------- API
     def version(self) -> int:

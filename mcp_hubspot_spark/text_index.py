@@ -51,24 +51,14 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from .locking import flock_held, locked_mutator
 from .operators.classifier import hash_bucket
 from .operators.text import tokens
 
 __all__ = ["TextIndex"]
 
 
-def _locked(fn):
-    """Run a TextIndex mutator under the index's flock (same contract
-    as vector_store._locked: single-writer, kernel-released on death)."""
-    import functools
-
-    @functools.wraps(fn)
-    def wrapper(self, *args, **kwargs):
-        with self._mutation_lock():
-            self._recover_swap(locked=True)
-            return fn(self, *args, **kwargs)
-
-    return wrapper
+_locked = locked_mutator(lambda self: self._recover_swap(locked=True))
 
 
 class TextIndex:
@@ -90,45 +80,11 @@ class TextIndex:
     # ------------------------------------------------------------ lock
 
     def _mutation_lock(self, timeout_s: float | None = None):
-        """flock-based single-writer lock; see the long rationale at
-        vector_store.IvfIndex._mutation_lock (same design, same scope:
-        driver-side directory mutations on one host)."""
-        import contextlib
-        import fcntl as _fcntl
-        import os as _os
-        import time as _time
-
+        """The single-writer lock serializing build/add/delete/compact
+        (see ``locking``)."""
         if timeout_s is None:
             timeout_s = self.LOCK_TIMEOUT_S
-        lock = self.root / "_mutation.lock"
-
-        @contextlib.contextmanager
-        def _held():
-            self.root.mkdir(parents=True, exist_ok=True)
-            fd = _os.open(lock, _os.O_CREAT | _os.O_WRONLY, 0o644)
-            try:
-                deadline = _time.monotonic() + timeout_s
-                while True:
-                    try:
-                        _fcntl.flock(fd, _fcntl.LOCK_EX | _fcntl.LOCK_NB)
-                        break
-                    except BlockingIOError:
-                        if _time.monotonic() >= deadline:
-                            raise TimeoutError(
-                                f"could not acquire {lock} after "
-                                f"{timeout_s}s — another writer is active"
-                            ) from None
-                        _time.sleep(0.05)
-                try:
-                    _os.ftruncate(fd, 0)
-                    _os.write(fd, str(_os.getpid()).encode())
-                    yield
-                finally:
-                    _fcntl.flock(fd, _fcntl.LOCK_UN)
-            finally:
-                _os.close(fd)
-
-        return _held()
+        return flock_held(self.root / "_mutation.lock", timeout_s)
 
     # ------------------------------------------------------------ meta
 
@@ -573,32 +529,19 @@ class TextIndex:
         while a writer holds it (the writer will finish its own swap —
         kernel-released on death, so a dead writer never blocks this).
         """
-        import fcntl as _fcntl
-        import os as _os
         import shutil
 
         post = self.root / "postings"
         tmp = self.root / "_postings_new"
         old = self.root / "_postings_old"
-        if post.exists() and not tmp.exists() and not old.exists():
-            return  # fast path: clean layout
+        if not tmp.exists() and not old.exists():
+            return  # fast path: no interrupted swap
         if not locked:
-            lock = self.root / "_mutation.lock"
             try:
-                fd = _os.open(lock, _os.O_CREAT | _os.O_WRONLY, 0o644)
-            except OSError:
-                return
-            try:
-                try:
-                    _fcntl.flock(fd, _fcntl.LOCK_EX | _fcntl.LOCK_NB)
-                except BlockingIOError:
-                    return  # live writer mid-swap; it will finish
-                try:
+                with self._mutation_lock(timeout_s=0.0):
                     self._recover_swap(locked=True)
-                finally:
-                    _fcntl.flock(fd, _fcntl.LOCK_UN)
-            finally:
-                _os.close(fd)
+            except TimeoutError:
+                pass  # live writer mid-swap; it will finish
             return
         if not post.exists() and tmp.exists():
             tmp.rename(post)

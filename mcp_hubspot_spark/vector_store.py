@@ -27,6 +27,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .locking import flock_held, locked_mutator
 from .operators.vector import knn
 
 VECTOR_STORE_COLUMNS = ("date", "vec_id", "embedding", "type", "data_json", "extras")
@@ -175,23 +176,11 @@ class VectorStore:
         )
 
 
-def _locked(fn):
-    """Run an IvfIndex mutator under the index's mutation lock. Crash
-    recovery runs FIRST, while the lock is held and before the mutator
-    reads any cell files: a hard-crashed ``_swap_cells`` can leave a
-    cell's only rows under ``_swap_backup``, and a mutator that read the
-    cells before restoring would plan against (and then persist) the
-    truncated view — e.g. ``delete()`` would miss ids living in the
-    backed-up cell entirely."""
-    import functools
-
-    @functools.wraps(fn)
-    def wrapper(self, *args, **kwargs):
-        with self._mutation_lock():
-            self._recover_swap_backup()
-            return fn(self, *args, **kwargs)
-
-    return wrapper
+# Crash recovery runs FIRST, under the lock: a hard-crashed ``_swap_cells``
+# can leave a cell's only rows under ``_swap_backup``, and a mutator that
+# read the cells before restoring would plan against the truncated view —
+# e.g. ``delete()`` would miss ids living in the backed-up cell entirely.
+_locked = locked_mutator(lambda self: self._recover_swap_backup())
 
 
 class IvfIndex:
@@ -216,69 +205,11 @@ class IvfIndex:
         self.root = Path(str(path))
 
     def _mutation_lock(self, timeout_s: float | None = None):
-        """Serialize the file-mutating operations (build/add/delete/
-        compact) with ``flock`` on a lock file — the same coarse
-        single-writer contract the reference's FAISS manager gets for
-        free from being one process, made explicit here because two
-        concurrent cell rewrites (or an add appending into a cell being
-        swapped) would corrupt the directory layout. Readers
-        (``search``) never take the lock: they resolve a consistent
-        file listing per query via the manifest or the parquet
-        snapshot.
-
-        ``flock`` (not O_CREAT|O_EXCL existence) because the kernel
-        releases it when the owner dies — even ``kill -9`` mid-mutation
-        leaves no stale lock, so post-crash search-time recovery and
-        the next mutation proceed immediately, and there is no
-        lock-breaking protocol to get wrong (PID-liveness breaking has
-        an unfixable check-then-remove race where a contender can
-        delete a FRESH lock re-acquired after its staleness check,
-        admitting two writers). The lock FILE persists on disk between
-        mutations — only the flock on it matters; its PID content is a
-        diagnostic. Single-host semantics (an advisory lock on the
-        local filesystem), which is the lock's scope anyway: it guards
-        driver-side directory renames. Each acquisition opens its own
-        file description, so two writers in one process (threads)
-        still exclude each other."""
-        import contextlib
-        import fcntl as _fcntl
-        import os as _os
-        import time as _time
-
+        """The single-writer lock serializing build/add/delete/compact
+        (see ``locking``). Readers (``search``) never take it."""
         if timeout_s is None:
             timeout_s = self.LOCK_TIMEOUT_S
-        lock = self.root / "_mutation.lock"
-
-        @contextlib.contextmanager
-        def _held():
-            self.root.mkdir(parents=True, exist_ok=True)
-            fd = _os.open(lock, _os.O_CREAT | _os.O_WRONLY, 0o644)
-            try:
-                deadline = _time.monotonic() + timeout_s
-                while True:
-                    try:
-                        _fcntl.flock(
-                            fd, _fcntl.LOCK_EX | _fcntl.LOCK_NB
-                        )
-                        break
-                    except BlockingIOError:
-                        if _time.monotonic() >= deadline:
-                            raise TimeoutError(
-                                f"could not acquire {lock} after "
-                                f"{timeout_s}s — another writer is "
-                                "active"
-                            ) from None
-                        _time.sleep(0.05)
-                try:
-                    _os.ftruncate(fd, 0)
-                    _os.write(fd, str(_os.getpid()).encode())
-                    yield
-                finally:
-                    _fcntl.flock(fd, _fcntl.LOCK_UN)
-            finally:
-                _os.close(fd)
-
-        return _held()
+        return flock_held(self.root / "_mutation.lock", timeout_s)
 
     def _recover_swap_backup(self) -> None:
         """Restore any cell whose ONLY copy survives under

@@ -1,24 +1,18 @@
-"""Driver-side memo policy (r13 advice / verdict what's-wrong #5).
-
-The expression/schema/partition memos are pure metadata caches, but they
-must (a) never hand a plan-bound Column to an unrelated plan, (b) die
-with the SparkSession whose py4j objects they wrap, and (c) stay bounded
-in a long-lived serving process.
-"""
+"""Driver-side expression builders: typed constant arrays, and the
+Column|str builders giving the same values for either input spelling."""
 
 from __future__ import annotations
 
-from pyspark.sql import Column, SparkSession
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from mcp_hubspot_spark.functions import scalars
 from mcp_hubspot_spark.functions.scalars import (
     const_double_array,
     const_long_array,
-    memo_expr,
 )
-from mcp_hubspot_spark.operators.dedup import minhash_signature
+from mcp_hubspot_spark.operators.dedup import minhash_signature, simhash
 from mcp_hubspot_spark.operators.text import positional_ngrams
+from mcp_hubspot_spark.operators.vector import sign_pack
 
 
 def test_empty_const_arrays_are_typed(spark):
@@ -46,63 +40,27 @@ def test_empty_const_arrays_are_typed(spark):
     assert row2.l == [1, 2] and row2.d == [0.5]
 
 
-def test_memo_expr_hit_and_cap(spark):
-    scalars._EXPR_MEMO.clear()
-    a = memo_expr(("t", "x", 1), lambda: F.col("x") + 1)
-    b = memo_expr(("t", "x", 1), lambda: F.col("x") + 2)
-    assert a is b  # hit returns the first build
-    # FIFO cap: the memo never exceeds _EXPR_MEMO_CAP entries
-    for i in range(scalars._EXPR_MEMO_CAP + 50):
-        memo_expr(("cap", i), lambda i=i: F.lit(i))
-    assert len(scalars._EXPR_MEMO) <= scalars._EXPR_MEMO_CAP
-
-
-def test_memo_expr_clears_on_session_change(spark):
-    scalars._EXPR_MEMO.clear()
-    scalars._MEMO_SESSION = None
-    c = memo_expr(("sess", "x"), lambda: F.col("x") * 2)
-    assert ("sess", "x") in scalars._EXPR_MEMO
-    ns = spark.newSession()
-    old_active = SparkSession.getActiveSession()
-    SparkSession._activeSession = ns  # simulate a restarted session
-    try:
-        c2 = memo_expr(("sess", "x"), lambda: F.col("x") * 2)
-        # entry was rebuilt under the new session, not served stale
-        assert c2 is not c
-        # and the rebuilt expression still resolves and serves
-        got = ns.range(3).select(F.col("id").alias("x")).select(
-            c2.alias("y")
-        ).collect()
-        assert [r.y for r in got] == [0, 2, 4]
-    finally:
-        SparkSession._activeSession = old_active
-
-
-def test_column_input_bypasses_memo(spark):
-    """A plan-bound Column (df['text']) renders like F.col('text') but
-    resolves against one DataFrame; it must never be memoized."""
-    scalars._EXPR_MEMO.clear()
-    df = spark.createDataFrame([("a b c d",)], "text string")
-    col_sig = minhash_signature(df["text"], num_perm=4)
-    assert isinstance(col_sig, Column)
-    assert not any(
-        k[0] == "minhash_signature" for k in scalars._EXPR_MEMO
+def test_column_and_name_inputs_agree(spark):
+    """The Column|str builders give equal values for a plan-bound Column
+    (``df["text"]``) and the bare column name."""
+    df = spark.createDataFrame(
+        [("a b c d", [0.5, -1.0, 2.0, -0.1])], "text string, v array<double>"
     )
-    # string input memoizes, and both spellings compute the same result
-    str_sig = minhash_signature("text", num_perm=4)
-    assert any(k[0] == "minhash_signature" for k in scalars._EXPR_MEMO)
-    assert minhash_signature("text", num_perm=4) is str_sig
-    a = df.select(col_sig.alias("s")).collect()[0].s
-    b = df.select(str_sig.alias("s")).collect()[0].s
-    assert a == b
+    pairs = [
+        (minhash_signature(df["text"], num_perm=4),
+         minhash_signature("text", num_perm=4)),
+        (simhash(df["text"]), simhash("text")),
+        (sign_pack(df["v"], dim=4), sign_pack("v", dim=4)),
+    ]
+    for by_col, by_name in pairs:
+        assert isinstance(by_col, Column)
+        a = df.select(by_col.alias("s")).collect()[0].s
+        b = df.select(by_name.alias("s")).collect()[0].s
+        assert a == b
 
 
-def test_positional_ngrams_memoized_and_correct(spark):
-    scalars._EXPR_MEMO.clear()
-    toks = F.split(F.col("text"), " ")
-    g1 = positional_ngrams(toks, 2)
-    g2 = positional_ngrams(F.split(F.col("text"), " "), 2)
-    assert g1 is g2  # equal rendered text -> one build
+def test_positional_ngrams_correct(spark):
+    g = positional_ngrams(F.split(F.col("text"), " "), 2)
     df = spark.createDataFrame([("a b c",), ("x y",)], "text string")
-    rows = df.select(g1.alias("g")).collect()
+    rows = df.select(g.alias("g")).collect()
     assert rows[0].g == ["a b", "b c"] and rows[1].g == ["x y"]

@@ -277,6 +277,48 @@ def test_snapshot_commit_conflict_detected(spark, tmp_path):
     assert tbl.version() == 1  # losing commit left the table untouched
 
 
+def test_snapshot_dead_committer_leaves_no_effective_lock(spark, tmp_path):
+    """A committer killed while holding the commit lock leaves the lock
+    FILE on disk, but the kernel drops its flock with the process: the
+    next merge commits instead of timing out on the leftover. The
+    crashed holder is a REAL subprocess that locks and dies without
+    releasing."""
+    import os
+    import subprocess
+    import sys
+
+    from mcp_hubspot_spark.sources.snapshot_table import SnapshotTable
+
+    tbl = SnapshotTable(spark, str(tmp_path / "t"))
+    tbl.create(
+        spark.createDataFrame(
+            [(1, "a", 1.0)], "id long, name string, score double"
+        ),
+        keys=["id"],
+        n_buckets=4,
+    )
+    lock = os.path.join(tbl.root, "_commit.lock")
+    subprocess.run(
+        [
+            sys.executable,
+            "-c",
+            "import fcntl, os\n"
+            f"fd = os.open({lock!r}, os.O_CREAT | os.O_WRONLY)\n"
+            "fcntl.flock(fd, fcntl.LOCK_EX)\n"
+            "os._exit(9)\n",
+        ],
+        check=False,
+    )
+    assert os.path.exists(lock)  # the kill -9 leftover
+    tbl.merge_upsert(
+        spark.createDataFrame(
+            [(2, "b", 2.0)], "id long, name string, score double"
+        )
+    )
+    assert tbl.version() == 1
+    assert _snap_rows(tbl) == {1: ("a", 1.0), 2: ("b", 2.0)}
+
+
 def test_snapshot_delete_where(spark, tmp_path):
     from pyspark.sql import functions as F
 
